@@ -338,10 +338,9 @@ def _bootstrap_store(
 def _swap_dir_in(path: str, tmp: str) -> None:
     """The backup-rename swap on an ALREADY-STAGED temp directory —
     the shared crash-critical back half of :func:`_swap_in` and of
-    every store that stages its own temp contents (``mor_compact``'s
-    z-ordered rewrite, the plaid token bags): clear a stale backup,
-    rename live→backup, tmp→live (restoring live if that rename
-    fails), drop the backup.  One implementation so a future
+    every store that stages its own temp contents (the plaid token
+    bags): clear a stale backup, rename live→backup, tmp→live
+    (restoring live if that rename fails), drop the backup.  One implementation so a future
     hardening (fsync, different restore policy) cannot silently miss
     a hand-rolled copy (the round-9 review finding).  Uses the
     standard ``.__merge_backup`` suffix, so

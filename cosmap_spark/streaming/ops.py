@@ -1910,13 +1910,13 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
 
     Facts by store kind (probed from the layout):
 
-    - merge-on-read (either commit backend): ``mor_epochs`` (delta
-      stack depth; significant once ≥ ``compact_after`` — compact me),
-      ``mor_oldest_delta_age_s``, ``debris_dirs`` (vacuum dry-run;
-      significant when > 0 — vacuum me), ``manifest_versions`` /
-      ``orphan_data_dirs`` on the manifest backend (orphans
-      significant — expire/vacuum me);
-    - any rename-machinery store: ``pending_interrupted_swap``
+    - any manifest store: ``manifest_versions`` and
+      ``orphan_data_dirs`` (vacuum dry-run; significant when > 0 —
+      expire/vacuum me);
+    - merge-on-read stores additionally: ``mor_epochs`` (delta stack
+      depth; significant once ≥ ``compact_after`` — compact me),
+      ``mor_oldest_delta_age_s``, ``ledger_last_epoch``;
+    - rename-machinery (monitor) stores: ``pending_interrupted_swap``
       (backup present with the live dir MISSING — significant, the
       one state needing a manual restore), ``ledger_last_epoch``;
     - monitor stores additionally report ``rows:<subdir>`` per state
@@ -1933,7 +1933,7 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
     jobs except the small state-table counts."""
     import os as _os
 
-    from cosmap_spark.sinks.mor import META_NAME, mor_vacuum
+    from cosmap_spark.sinks.commit import ManifestStore
 
     rows: list[tuple] = []
 
@@ -1959,8 +1959,6 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
         # cursor BESIDE the store (<path>.sync / <path>.aggsync); the
         # round-10 src_path stamp lets health compute staleness —
         # source head minus synced version, significant when behind
-        from cosmap_spark.sinks.commit import ManifestStore
-
         for suffix in (".sync", ".aggsync"):
             cpath = path.rstrip("/") + suffix
             if not _os.path.isdir(_os.path.join(cpath, "_manifests")):
@@ -1977,60 +1975,28 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
 
     for name, path in stores.items():
         sync_facts(name, path)
-        is_mor_rename = _os.path.exists(_os.path.join(path, META_NAME))
-        is_mor_manifest = (
-            not is_mor_rename
-            and _os.path.isdir(_os.path.join(path, "_manifests"))
-        )
-        if is_mor_rename or is_mor_manifest:
-            from cosmap_spark.sinks.commit import ManifestStore
-            from cosmap_spark.sinks.mor import _epochs
-
-            if is_mor_manifest:
-                ms = ManifestStore(path)
-                _, man = ms.latest()
+        if _os.path.isdir(_os.path.join(path, "_manifests")):
+            ms = ManifestStore(path)
+            _, man = ms.latest()
+            fact(name, "manifest_versions", len(ms.versions()), False)
+            orphans = ms.vacuum(dry_run=True)  # default age guard
+            fact(name, "orphan_data_dirs", len(orphans), len(orphans) > 0)
+            if "epochs" not in man:
                 # non-MOR manifest stores (e.g. the plaid index) carry
-                # no epoch log — they still report versions + orphans
-                man_epochs = man.get("epochs", [])
-                epochs = [e["epoch"] for e in man_epochs]
-                fact(name, "manifest_versions", len(ms.versions()), False)
-                orphans = ms.vacuum(dry_run=True)  # default age guard
-                fact(name, "orphan_data_dirs", len(orphans),
-                     len(orphans) > 0)
-                oldest_age = None
-                if man_epochs:
-                    import time as _time
-
-                    oldest = min(
-                        _os.stat(ms.data_path(e["dir"])).st_mtime
-                        for e in man_epochs
-                    )
-                    oldest_age = _time.time() - oldest
-                if "epochs" not in man:
-                    continue  # no delta-log facts for non-MOR manifests
-            else:
-                epochs = _epochs(path)
-                debris = mor_vacuum(path, dry_run=True)  # age-guarded
-                fact(name, "debris_dirs", len(debris), len(debris) > 0)
-                oldest_age = None
-                if epochs:
-                    import time as _time
-
-                    oldest = _os.stat(_os.path.join(
-                        path, "deltas", f"epoch={epochs[0]}"
-                    )).st_mtime
-                    oldest_age = _time.time() - oldest
-                base = _os.path.join(path, "base")
-                fact(name, "pending_interrupted_swap",
-                     int(_os.path.exists(f"{base}.__merge_backup")
-                         and not _os.path.exists(base)),
-                     _os.path.exists(f"{base}.__merge_backup")
-                     and not _os.path.exists(base))
+                # no delta log — versions + orphans only
+                continue
+            epochs = man["epochs"]
             fact(name, "mor_epochs", len(epochs),
                  len(epochs) >= compact_after)
-            if oldest_age is not None:
+            if epochs:
+                import time as _time
+
+                oldest = min(
+                    _os.stat(ms.data_path(e["dir"])).st_mtime
+                    for e in epochs
+                )
                 fact(name, "mor_oldest_delta_age_s",
-                     round(oldest_age, 1), False)
+                     round(_time.time() - oldest, 1), False)
             le = ledger_last(path)
             if le is not None:
                 fact(name, "ledger_last_epoch", le, False)
@@ -2398,9 +2364,9 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     """Streaming CDC into a merge-on-read store — the MOR twin of
     :func:`upsert_stream`: each micro-batch APPENDS one delta epoch
     (``sinks.mor.mor_append`` — O(batch), no base file opened, one
-    rename) instead of rewriting the table; reads reconcile via
-    ``mor_read`` and ``mor_compact`` folds the log on whatever cadence
-    taste dictates.  The change envelope is the store schema plus the
+    manifest publish) instead of rewriting the table; reads reconcile
+    via ``mor_read`` and ``mor_compact`` folds the log on whatever
+    cadence taste dictates.  The change envelope is the store schema plus the
     optional ``__deleted`` tombstone flag and an optional ``seq_col``
     (collapses within-batch duplicate keys to the latest —
     ``latest_per_key``; without it batches must be key-unique, which
@@ -2419,20 +2385,21 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     A marker hit with a DIFFERENT fingerprint raises instead of
     silently dropping genuine data.  The store must already exist
     (``mor_init`` first — a stream must not invent the base
-    snapshot's schema)."""
+    snapshot's schema).  Any error a micro-batch raises is re-raised
+    naming the store path and the batch's ``epoch_id``."""
     import os
 
     from cosmap_spark.operators.merge import latest_per_key
     from cosmap_spark.sinks.mor import _meta_for, mor_append
     from cosmap_spark.sinks.writers import _require_local
 
-    # the epoch LEDGER here is os-based regardless of the store's own
-    # commit backend (both backends work for the appends themselves) —
-    # a remote store with a CommitFS still needs its ledger local
+    # the epoch LEDGER here is os-based while the appends ride the
+    # manifest commit protocol — a remote store with a CommitFS still
+    # needs its ledger local
     _require_local(store_path, "mor_ingest_stream")
     keys = _meta_for(store_path)["keys"]
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         ledger = os.path.join(store_path, "_epochs")
         marker = os.path.join(ledger, f"epoch-{epoch_id}")
         fp = _batch_fingerprint(batch_df)  # one batch-sized job
@@ -2458,6 +2425,15 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
         else:
             mor_append(spark, store_path, batch_df)
         _write_marker_atomic(marker, fp)
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        try:
+            ingest(batch_df, epoch_id)
+        except Exception as e:
+            raise RuntimeError(
+                f"mor_ingest_stream: micro-batch epoch {epoch_id} into "
+                f"{store_path!r} failed: {type(e).__name__}: {e}"
+            ) from e
 
     return (
         changes.writeStream.foreachBatch(run)

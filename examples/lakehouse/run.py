@@ -186,14 +186,19 @@ def main() -> None:
         # 6. merge-on-read: O(keys) deletes, read-time reconcile ------------
         # (round 9: the copy-on-write path above rewrites touched
         # partitions; the MOR store only APPENDS a delta epoch — the
-        # right-to-be-forgotten shape at 100 TB)
+        # right-to-be-forgotten shape at 100 TB.  Commits are
+        # object-store-shaped: immutable data dirs, one CAS-published
+        # manifest per commit, every version readable)
+        from cosmap_spark.sinks.commit import ManifestStore
         from cosmap_spark.sinks.mor import (
             mor_compact, mor_delete_keys, mor_init, mor_read, mor_vacuum,
         )
+        from cosmap_spark.streaming.ops import store_health
 
         mstore = os.path.join(root, "mor_table")
         mor_init(snap, mstore, ["c_custkey"])
-        base_dir = os.path.join(mstore, "base")
+        ms = ManifestStore(mstore)
+        base_dir = ms.data_path(ms.latest()[1]["base"])
         before = {f: os.stat(os.path.join(base_dir, f)).st_mtime_ns
                   for f in os.listdir(base_dir)}
         forget = spark.createDataFrame([(upd_key,)], "c_custkey long")
@@ -204,37 +209,23 @@ def main() -> None:
         assert mor_read(spark, mstore).where(
             F.col("c_custkey") == upd_key
         ).count() == 0
+        # version 1 (pre-delete) is still readable — time travel
+        assert mor_read(spark, mstore, version=1).where(
+            F.col("c_custkey") == upd_key
+        ).count() == 1
         n_folded = mor_compact(spark, mstore)
         assert mor_read(spark, mstore).where(
             F.col("c_custkey") == upd_key
         ).count() == 0
+        # history is retained, so nothing is unreferenced yet: vacuum
+        # reclaims dirs only after expire_versions drops their manifests
         debris = mor_vacuum(mstore, min_age_seconds=0)
         print(f"merge-on-read: O(keys) delete touched no base file; "
-              f"compaction folded {n_folded} epoch(s); vacuum removed "
-              f"{len(debris)} debris dir(s)")
+              f"compaction folded {n_folded} epoch(s); "
+              f"{len(ms.versions())} versions published, no data rename "
+              f"anywhere; vacuum removed {len(debris)} orphan dir(s)")
 
-        # 7. manifest-pointer backend + the store-health page -----------
-        # (round 10: the object-store-shaped commit — immutable data
-        # dirs, one CAS-published manifest per commit, time travel)
-        from cosmap_spark.sinks.commit import ManifestStore
-        from cosmap_spark.streaming.ops import store_health
-
-        vstore = os.path.join(root, "mor_versioned")
-        mor_init(snap, vstore, ["c_custkey"], backend="manifest")
-        mor_delete_keys(spark, vstore, forget)
-        assert mor_read(spark, vstore).where(
-            F.col("c_custkey") == upd_key
-        ).count() == 0
-        # version 1 (pre-delete) is still readable — time travel
-        assert mor_read(spark, vstore, version=1).where(
-            F.col("c_custkey") == upd_key
-        ).count() == 1
-        mor_compact(spark, vstore)
-        ms = ManifestStore(vstore)
-        print(f"manifest store: {len(ms.versions())} versions published, "
-              "no data rename anywhere")
-
-        # 8. change feed + incremental downstream sync -------------------
+        # 7. change feed + incremental downstream sync -------------------
         # (round 10: mor_changes is the Delta-CDF analog — net
         # insert/update/delete rows between two versions, assembled
         # from the retained epoch dirs even across the compaction
@@ -242,7 +233,7 @@ def main() -> None:
         # O(changes) per call with a crash-safe CAS cursor)
         from cosmap_spark.sinks.mor import mor_changes, mor_sync
 
-        feed = mor_changes(spark, vstore, from_version=1)
+        feed = mor_changes(spark, mstore, from_version=1)
         by_type = {
             r["_change_type"]: r["cnt"]
             for r in feed.groupBy("_change_type")
@@ -252,14 +243,14 @@ def main() -> None:
         print(f"change feed v1->head: {by_type}")
 
         replica = os.path.join(root, "mor_replica")
-        r1 = mor_sync(spark, vstore, replica)       # bootstrap
-        r2 = mor_sync(spark, vstore, replica)       # up to date
+        r1 = mor_sync(spark, mstore, replica)       # bootstrap
+        r2 = mor_sync(spark, mstore, replica)       # up to date
         assert r1["applied"] and not r2["applied"]
         assert mor_read(spark, replica).count() == \
-            mor_read(spark, vstore).count()
+            mor_read(spark, mstore).count()
         print("downstream replica synced: bootstrap + no-op catch-up")
 
-        # 9. maintained aggregate view (IVM) -----------------------------
+        # 8. maintained aggregate view (IVM) -----------------------------
         # (round 10: mor_sync_agg keeps a GROUP BY of the source store
         # fresh at O(changes + touched groups) per refresh — the
         # dashboard aggregate that never re-scans the table; each
@@ -271,10 +262,10 @@ def main() -> None:
                 "bal_cnt": ("countnn", "c_acctbal"),
                 "bal_sum": ("sum", "c_acctbal")}
         aggview = os.path.join(root, "mor_agg")
-        mor_sync_agg(spark, vstore, aggview,
+        mor_sync_agg(spark, mstore, aggview,
                      group_by=["c_nationkey"], aggs=spec)
         # an O(batch) source change, then an O(changes) refresh
-        movers = mor_read(spark, vstore).limit(3).select(
+        movers = mor_read(spark, mstore).limit(3).select(
             "c_custkey",
             F.lit(99).cast(dict(snap.dtypes)["c_nationkey"])
             .alias("c_nationkey"),
@@ -282,15 +273,15 @@ def main() -> None:
               if c not in ("c_custkey", "c_nationkey")],
             F.lit(False).alias("__deleted"),
         )
-        mor_append(spark, vstore, movers)
-        r = mor_sync_agg(spark, vstore, aggview,
+        mor_append(spark, mstore, movers)
+        r = mor_sync_agg(spark, mstore, aggview,
                          group_by=["c_nationkey"], aggs=spec)
         assert r["applied"]
         got = {r["c_nationkey"]: (r["customers"], r["bal_sum"])
                for r in mor_read(spark, aggview).collect()}
         want = {r["c_nationkey"]: (r["customers"], r["bal_sum"])
                 for r in agg_snapshot(
-                    mor_read(spark, vstore), ["c_nationkey"], spec
+                    mor_read(spark, mstore), ["c_nationkey"], spec
                 ).collect()}
         assert set(got) == set(want) and got[99][0] == 3
         assert all(
@@ -303,8 +294,7 @@ def main() -> None:
 
         print("store health (the maintenance page an operator acts on):")
         for r in store_health(
-            spark, {"mor_table": mstore, "mor_versioned": vstore,
-                    "mor_agg": aggview}
+            spark, {"mor_table": mstore, "mor_agg": aggview}
         ).orderBy("subject", "statistic").collect():
             flag = "  <-- act" if r["significant"] else ""
             print(f"  {r['subject']:<14} {r['statistic']:<28} "

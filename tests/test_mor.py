@@ -8,7 +8,8 @@ The round-9 contract set:
   * plan gate: the reconciling read broadcasts the delta side and
     never shuffles the base scan;
   * compaction: equal view before/after, idempotent re-application of
-    any delta SUFFIX (the crash-safety law for oldest-first removal).
+    any delta SUFFIX (the law behind compaction's CAS retry keeping a
+    concurrent append as the folded base's suffix).
 """
 
 from __future__ import annotations
@@ -35,53 +36,33 @@ def _rows(df):
     )
 
 
-@pytest.fixture(params=["rename", "manifest"])
-def store(spark, tmp_path, request):
-    """One MOR store per commit backend — every behavioral test runs
-    against BOTH the rename layout and the manifest-pointer layout
-    (round-9 verdict task #2's 'both backends green' criterion);
-    backend-specific crash mechanics skip the other param and are
-    covered by their own tests."""
+@pytest.fixture
+def store(spark, tmp_path):
+    """A 100-row MOR store keyed on ``k``."""
     base = spark.range(0, 100).select(
         F.col("id").alias("k"),
         (F.col("id") * 10).alias("v"),
         F.concat(F.lit("name-"), F.col("id").cast("string")).alias("name"),
     )
     path = str(tmp_path / "store")
-    mor_init(base, path, ["k"], backend=request.param)
+    mor_init(base, path, ["k"])
     return path
 
 
-def _kind(path: str) -> str:
-    from cosmap_spark.sinks.mor import _store_kind
-
-    return _store_kind(path)
-
-
 def _n_epochs(path: str) -> int:
-    """Committed epoch count on either backend."""
+    """Live (uncompacted) epoch count."""
     from cosmap_spark.sinks.commit import ManifestStore
-    from cosmap_spark.sinks.mor import _epochs
 
-    if _kind(path) == "manifest":
-        return len(ManifestStore(path).latest()[1]["epochs"])
-    return len(_epochs(path))
-
-
-def _skip_unless_rename(path: str, why: str) -> None:
-    if _kind(path) != "rename":
-        pytest.skip(f"rename-backend mechanics: {why}")
+    return len(ManifestStore(path).latest()[1]["epochs"])
 
 
 def _base_dir_of(path: str) -> str:
-    """The CURRENT base data directory on either backend (the manifest
-    backend's moves with every compaction — re-resolve after one)."""
+    """The CURRENT base data directory (it moves with every
+    compaction — re-resolve after one)."""
     from cosmap_spark.sinks.commit import ManifestStore
 
-    if _kind(path) == "manifest":
-        ms = ManifestStore(path)
-        return ms.data_path(ms.latest()[1]["base"])
-    return os.path.join(path, "base")
+    ms = ManifestStore(path)
+    return ms.data_path(ms.latest()[1]["base"])
 
 
 def _batch(spark, rows):
@@ -122,9 +103,8 @@ def test_mor_round_trip_law(spark, store):
 def test_mor_writes_never_touch_base(spark, store):
     """Appends, deletes AND the reconciling read leave every
     pre-existing store file byte-identical and un-rewritten (path set
-    + mtime + size + inode): the rename backend's base files, the
-    manifest backend's immutable data dirs AND published manifests —
-    writes only ever ADD."""
+    + mtime + size + inode): the immutable data dirs AND published
+    manifests — writes only ever ADD."""
 
     def base_state():
         out = {}
@@ -176,7 +156,7 @@ def test_mor_read_plan_gate(spark, store):
         r"BroadcastHashJoin.*LeftAnti[\s\S]{0,400}", plan
     ).group(0)
     # the base scan feeds the anti-join DIRECTLY (its first child is
-    # the parquet FileScan, not an exchange) — true on both layouts
+    # the parquet FileScan, not an exchange)
     first_child = streamed.splitlines()[1]
     assert "FileScan parquet" in first_child, streamed
 
@@ -192,58 +172,10 @@ def test_mor_compact_preserves_view_and_clears_log(spark, store):
     assert _n_epochs(store) == 0
     # compaction of an empty log is a no-op
     assert mor_compact(spark, store) == 0
-    # the store keeps working after compaction (epoch numbering resets
-    # harmlessly)
+    # the store keeps working after compaction
     mor_append(spark, store, _batch(spark, [(5, 777, "u5c", False)]))
     m = {r["k"]: r["v"] for r in mor_read(spark, store).collect()}
     assert m[5] == 777 and 6 not in m
-
-
-def test_mor_suffix_reapplication_is_noop(spark, store):
-    """The crash-safety law behind oldest-first epoch removal: a crash
-    after the base swap leaves a SUFFIX of the delta stack, whose
-    re-application must be a no-op — simulated by monkeypatching the
-    removal to die after the first (oldest) epoch."""
-    import shutil as _sh
-
-    import cosmap_spark.sinks.mor as M
-
-    _skip_unless_rename(
-        store, "manifest compaction has no epoch-removal step to "
-        "crash (one CAS publish; window pinned in "
-        "test_mor_manifest_publish_crash_window)"
-    )
-
-    e1 = _batch(spark, [(5, 555, "u5", False), (300, 1, "i300", False)])
-    e2 = _batch(spark, [(5, 666, "u5b", False), (300, None, None, True)])
-    mor_append(spark, store, e1)
-    mor_append(spark, store, e2)
-    want = _rows(mor_read(spark, store))
-
-    calls = {"n": 0}
-    real_rmtree = _sh.rmtree
-
-    def dying_rmtree(p, *a, **kw):
-        if "epoch=" in str(p):
-            calls["n"] += 1
-            if calls["n"] == 2:
-                raise RuntimeError("injected crash mid-cleanup")
-        return real_rmtree(p, *a, **kw)
-
-    M.shutil.rmtree, saved = dying_rmtree, M.shutil.rmtree
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            mor_compact(spark, store)
-    finally:
-        M.shutil.rmtree = saved
-    # epoch 1 removed, epoch 2 (the suffix) survived the crash
-    left = os.listdir(os.path.join(store, "deltas"))
-    assert left == ["epoch=2"]
-    # the read is STILL the correct view (e2 re-applies as a no-op)
-    assert _rows(mor_read(spark, store)) == want
-    # and a retried compaction completes and preserves it
-    assert mor_compact(spark, store) == 1
-    assert _rows(mor_read(spark, store)) == want
 
 
 def test_mor_reconcile_idempotence_law(spark):
@@ -285,21 +217,38 @@ def test_mor_guards(spark, store, tmp_path):
         mor_init(spark.range(1), str(tmp_path / "s2"), ["k"])
 
 
+def test_mor_refuses_legacy_rename_layout(spark, tmp_path):
+    """A directory holding a ``_mor_meta.json`` sidecar is a store in
+    the retired rename layout (``base/`` + ``deltas/epoch=<N>/``):
+    reads, appends and a re-init over it each refuse with a ValueError
+    naming the path."""
+    import json
+
+    path = str(tmp_path / "legacy")
+    os.makedirs(os.path.join(path, "base"))
+    os.makedirs(os.path.join(path, "deltas"))
+    with open(os.path.join(path, "_mor_meta.json"), "w") as f:
+        json.dump({"version": 1, "min_reader_version": 1, "keys": ["k"]}, f)
+    base = spark.range(3).select(F.col("id").alias("k"))
+    for verb in (
+        lambda: mor_read(spark, path),
+        lambda: mor_append(spark, path, _batch(spark, [(1, 1, "u", False)])),
+        lambda: mor_init(base, path, ["k"]),
+    ):
+        with pytest.raises(ValueError, match="no longer supported") as err:
+            verb()
+        assert path in str(err.value)
+    # nothing was written beside the legacy layout
+    assert sorted(os.listdir(path)) == ["_mor_meta.json", "base", "deltas"]
+
+
 def test_mor_torn_delta_write_invisible(spark, store):
-    """A died writer's debris is structurally invisible to reads on
-    both backends: a dot-prefixed temp dir in the rename layout's
-    delta log; an unreferenced data dir (written but never published)
-    in the manifest layout."""
-    if _kind(store) == "manifest":
-        dead = os.path.join(store, "data", "deadbeefcafe")
-        os.makedirs(dead)
-        with open(os.path.join(dead, "part-0.parquet"), "w") as f:
-            f.write("garbage")
-    else:
-        d = os.path.join(store, "deltas")
-        os.makedirs(os.path.join(d, ".tmp_dead"), exist_ok=True)
-        with open(os.path.join(d, ".tmp_dead", "part-0.parquet"), "w") as f:
-            f.write("garbage")
+    """A died writer's debris — an unreferenced data dir, written but
+    never published — is structurally invisible to reads."""
+    dead = os.path.join(store, "data", "deadbeefcafe")
+    os.makedirs(dead)
+    with open(os.path.join(dead, "part-0.parquet"), "w") as f:
+        f.write("garbage")
     assert mor_read(spark, store).count() == 100
     e = mor_append(spark, store, _batch(spark, [(1, 11, "u", False)]))
     assert e == 1
@@ -315,62 +264,6 @@ def test_mor_schema_alignment(spark, store):
     mor_append(spark, store, wide)
     row = mor_read(spark, store).where(F.col("k") == 1).collect()[0]
     assert row["v"] == 11 and "junk" not in row.asDict()
-
-
-def test_mor_vacuum_removes_debris_only(spark, store):
-    """Vacuum removes leaked temp dirs (died init/compact/append) and
-    nothing else; the age guard protects in-flight writers; a pending
-    merge backup is never touched."""
-    import shutil as _sh
-
-    from cosmap_spark.sinks.mor import mor_vacuum
-
-    _skip_unless_rename(
-        store, "manifest vacuum is reachability-based "
-        "(test_mor_manifest_vacuum_and_history)"
-    )
-    mor_append(spark, store, _batch(spark, [(1, 11, "u", False)]))
-    # plant debris of all three classes
-    os.makedirs(f"{store}.__init_tmp_dead")
-    os.makedirs(os.path.join(store, "base.__merge_tmp_dead"))
-    os.makedirs(os.path.join(store, "deltas", ".tmp_dead"))
-    # plant a pending backup (must survive)
-    _sh.copytree(os.path.join(store, "base"),
-                 os.path.join(store, "base.__merge_backup"))
-
-    # fresh debris survives the age guard
-    assert mor_vacuum(store, min_age_seconds=3600) == []
-    removed = sorted(os.path.basename(p)
-                     for p in mor_vacuum(store, min_age_seconds=0))
-    assert removed == sorted([
-        f"{os.path.basename(store)}.__init_tmp_dead",
-        "base.__merge_tmp_dead", ".tmp_dead",
-    ])
-    assert os.path.exists(os.path.join(store, "base.__merge_backup"))
-    assert not os.path.exists(f"{store}.__init_tmp_dead")
-    assert not os.path.exists(os.path.join(store, "deltas", ".tmp_dead"))
-    # the store still reads and the real delta survived
-    assert mor_read(spark, store).count() == 100
-    assert os.path.exists(os.path.join(store, "deltas", "epoch=1"))
-
-
-def test_mor_vacuum_cleans_died_init(spark, tmp_path):
-    """Round-9 review finding: a died mor_init leaves ONLY the
-    .__init_tmp_* sibling — the store never existed — and vacuum must
-    still clean it (requiring the meta made that debris
-    unvacuumable)."""
-    from cosmap_spark.sinks.mor import mor_vacuum
-
-    path = str(tmp_path / "never_born")
-    os.makedirs(f"{path}.__init_tmp_dead")
-    removed = mor_vacuum(path, min_age_seconds=0)
-    assert [os.path.basename(p) for p in removed] == [
-        "never_born.__init_tmp_dead"
-    ]
-    # an existing non-store path still refuses loudly
-    os.makedirs(path)
-    with pytest.raises(ValueError, match="not a merge-on-read store"):
-        mor_vacuum(path, min_age_seconds=0)
 
 
 def test_mor_init_refuses_reserved_columns(spark, tmp_path):
@@ -469,6 +362,27 @@ def test_mor_ingest_stream(spark, store, tmp_path):
     assert _rows(mor_read(spark, store)) == want
 
 
+def test_mor_ingest_stream_failure_names_store_and_epoch(
+        spark, store, tmp_path):
+    """A micro-batch the store refuses (a NULL merge key) stops the
+    stream with an error naming the store path and the batch's
+    epoch_id, and commits nothing."""
+    from cosmap_spark.streaming.ops import mor_ingest_stream
+
+    schema = f"k long, v long, name string, {DELETE_COL} boolean"
+    land = str(tmp_path / "null_land")
+    spark.createDataFrame([(None, 1, "x", False)], schema) \
+        .coalesce(1).write.parquet(land)
+    q = mor_ingest_stream(spark.readStream.schema(schema).parquet(land),
+                          store, str(tmp_path / "null_ck"))
+    with pytest.raises(Exception) as err:
+        q.awaitTermination()
+    msg = str(err.value)
+    assert "micro-batch epoch 0" in msg and store in msg, msg
+    assert "NULL values in merge-key" in msg, msg
+    assert _n_epochs(store) == 0
+
+
 def test_mor_compact_zordered(spark, store):
     """Compaction as OPTIMIZE-with-ZORDER: the folded view is
     identical to the plain compaction, the base is clustered
@@ -539,7 +453,7 @@ def test_mor_null_keys_refused(spark, store, tmp_path):
 
 
 def test_mor_manifest_publish_crash_window(spark, tmp_path):
-    """The manifest backend's ONE crash window, both halves pinned:
+    """The commit protocol's ONE crash window, both halves pinned:
 
     * die AFTER the data write, BEFORE the publish → the store is
       byte-for-byte unchanged for readers (the orphan dir is invisible
@@ -558,7 +472,7 @@ def test_mor_manifest_publish_crash_window(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     want = _rows(mor_read(spark, path))
 
     real_publish = C.LocalFS.publish_exclusive
@@ -597,14 +511,9 @@ def test_mor_manifest_publish_crash_window(spark, tmp_path):
 
 
 def test_mor_manifest_cas_conflict_and_concurrent_append(spark, tmp_path):
-    """Concurrent-writer serialization, both backends:
-
-    * manifest: the version CAS — publishing against a stale expected
-      version raises CommitConflict and changes nothing;
-    * rename: the epoch-dir rename — a writer that computed an epoch a
-      concurrent winner already committed gets a loud ValueError (the
-      round-9 'single-writer by assumption' is now enforced), and its
-      staging debris is cleaned up."""
+    """Concurrent-writer serialization by the version CAS: publishing
+    against a stale expected version raises CommitConflict and changes
+    nothing."""
     from cosmap_spark.sinks.commit import CommitConflict, ManifestStore
 
     path = str(tmp_path / "mstore")
@@ -612,7 +521,7 @@ def test_mor_manifest_cas_conflict_and_concurrent_append(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     ms = ManifestStore(path)
     v, man = ms.latest()
     # writer A commits normally
@@ -623,73 +532,6 @@ def test_mor_manifest_cas_conflict_and_concurrent_append(spark, tmp_path):
                    expected_version=v)
     assert ms.latest()[0] == 2  # B changed nothing
 
-    # rename backend: stale epoch listing → loud refusal, no debris
-    import cosmap_spark.sinks.mor as M
-
-    rpath = str(tmp_path / "rstore")
-    mor_init(base, rpath, ["k"])
-    mor_append(spark, rpath, _batch(spark, [(1, 11, "a", False)]))
-    real_epochs = M._epochs
-    M._epochs = lambda p: []  # writer B listed before A committed
-    try:
-        with pytest.raises(ValueError, match="concurrent writer"):
-            mor_append(spark, rpath, _batch(spark, [(2, 22, "b", False)]))
-    finally:
-        M._epochs = real_epochs
-    # A's epoch intact, B left no staging debris, a retry claims 2
-    assert sorted(os.listdir(os.path.join(rpath, "deltas"))) == ["epoch=1"]
-    assert mor_append(spark, rpath, _batch(spark, [(2, 22, "b", False)])) == 2
-    m = {r["k"]: r["v"] for r in mor_read(spark, rpath).collect()}
-    assert m[1] == 11 and m[2] == 22
-
-
-def test_mor_rename_concurrent_append_threads(spark, tmp_path):
-    """The enforced single-writer contract under a REAL race: two
-    threads appending simultaneously either serialize onto distinct
-    epochs or exactly one loses loudly — never two writers sharing an
-    epoch, never silent data loss."""
-    import threading
-
-    path = str(tmp_path / "rstore")
-    base = spark.range(0, 10).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
-        F.lit("x").alias("name"),
-    )
-    mor_init(base, path, ["k"])
-    results: dict[str, object] = {}
-
-    def run(tag, batch):
-        try:
-            results[tag] = mor_append(spark, path, batch)
-        except ValueError as e:
-            results[tag] = e
-
-    t1 = threading.Thread(
-        target=run, args=("a", _batch(spark, [(1, 11, "a", False)])))
-    t2 = threading.Thread(
-        target=run, args=("b", _batch(spark, [(2, 22, "b", False)])))
-    t1.start(); t2.start(); t1.join(); t2.join()
-
-    got = [results["a"], results["b"]]
-    epochs_committed = sorted(
-        int(n.split("=")[1])
-        for n in os.listdir(os.path.join(path, "deltas"))
-        if n.startswith("epoch=")
-    )
-    oks = [r for r in got if isinstance(r, int)]
-    # distinct epochs for every winner; every committed dir accounted
-    assert sorted(oks) == epochs_committed
-    assert len(set(oks)) == len(oks)
-    # losers (if any) raised the loud contract error
-    for r in got:
-        if not isinstance(r, int):
-            assert "concurrent writer" in str(r)
-    # the view contains exactly the winners' rows
-    m = {r["k"]: r["v"] for r in mor_read(spark, path).collect()}
-    if isinstance(results["a"], int):
-        assert m[1] == 11
-    if isinstance(results["b"], int):
-        assert m[2] == 22
 
 
 def test_mor_manifest_time_travel_and_history(spark, tmp_path):
@@ -706,7 +548,7 @@ def test_mor_manifest_time_travel_and_history(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     v1 = _rows(mor_read(spark, path))
     mor_append(spark, path, _batch(spark, [(1, 111, "u1", False)]))
     v2 = _rows(mor_read(spark, path))
@@ -738,23 +580,16 @@ def test_mor_manifest_time_travel_and_history(spark, tmp_path):
                        match="not exist|PATH_NOT_FOUND|No such file"):
         mor_read(spark, path, version=2).collect()
 
-    # rename backend refuses version pins honestly
-    rpath = str(tmp_path / "rstore")
-    mor_init(base, rpath, ["k"])
-    with pytest.raises(ValueError, match="version-pinned"):
-        mor_read(spark, rpath, version=1)
 
 
 def test_mor_schema_evolution(spark, store):
-    """ADD-only schema evolution, both backends (round-9 verdict task
-    #4): a widening append adds nullable columns; the base and old
-    epochs read back with NULL fill; later old-shaped batches write
-    NULL there (rows replace wholesale); the widen → read → compact
-    round-trip preserves the view; collisions and reserved names
-    refuse; a store needing a newer reader refuses loudly."""
-    import json as _json
-
-    from cosmap_spark.sinks.mor import META_NAME
+    """ADD-only schema evolution (round-9 verdict task #4): a widening
+    append adds nullable columns; the base and old epochs read back
+    with NULL fill; later old-shaped batches write NULL there (rows
+    replace wholesale); the widen → read → compact round-trip
+    preserves the view; collisions and reserved names refuse; a store
+    needing a newer reader refuses loudly."""
+    from cosmap_spark.sinks.commit import ManifestStore
 
     # without the flag, extra columns are dropped (historical contract
     # — pinned separately in test_mor_schema_alignment)
@@ -815,19 +650,9 @@ def test_mor_schema_evolution(spark, store):
         mor_append(spark, store, bad_reserved, allow_new_columns=True)
 
     # old-reader-new-store refusal (the Delta reader-version gate)
-    if _kind(store) == "manifest":
-        from cosmap_spark.sinks.commit import ManifestStore
-
-        ms = ManifestStore(store)
-        v, man = ms.latest()
-        ms.publish({**man, "min_reader_version": 99}, expected_version=v)
-    else:
-        meta_path = os.path.join(store, META_NAME)
-        with open(meta_path) as f:
-            meta = _json.load(f)
-        meta["min_reader_version"] = 99
-        with open(meta_path, "w") as f:
-            _json.dump(meta, f)
+    ms = ManifestStore(store)
+    v, man = ms.latest()
+    ms.publish({**man, "min_reader_version": 99}, expected_version=v)
     with pytest.raises(ValueError, match="reader version"):
         mor_read(spark, store)
     with pytest.raises(ValueError, match="reader version"):
@@ -837,7 +662,7 @@ def test_mor_schema_evolution(spark, store):
 def test_mor_read_predicate_pushdown(spark, store):
     """Round-9 verdict task #7: a filter above the reconciled view
     reaches the BASE scan's PushedFilters (Catalyst pushes through the
-    union and the anti-join's streamed side) on both backends — the
+    union and the anti-join's streamed side) — the
     property partition pruning over a 100 TB base rests on.  The value
     predicate lands on the base scan only (a delta row's value is
     decided by the winner window, so pushing it pre-window would be
@@ -864,7 +689,7 @@ def test_mor_read_predicate_pushdown(spark, store):
 
 
 def test_mor_manifest_lifecycle_needs_no_rename(spark, tmp_path):
-    """The property the manifest backend exists for, proven
+    """The property the manifest protocol exists for, proven
     mechanically: the ENTIRE store lifecycle — init, append, delete,
     read, compact, expire, vacuum — issues ZERO Python-side
     ``os.rename``/``os.replace`` calls (publish is link-based
@@ -893,7 +718,7 @@ def test_mor_manifest_lifecycle_needs_no_rename(spark, tmp_path):
     _os.rename = banned
     _os.replace = banned
     try:
-        mor_init(base, path, ["k"], backend="manifest")
+        mor_init(base, path, ["k"])
         mor_append(spark, path, _batch(spark, [(1, 11, "u", False)]))
         mor_delete_keys(spark, path,
                         spark.createDataFrame([(2,)], "k long"))
@@ -908,55 +733,6 @@ def test_mor_manifest_lifecycle_needs_no_rename(spark, tmp_path):
                 for r in mor_read(spark, path).collect()} == got
     finally:
         _os.rename, _os.replace = real_rename, real_replace
-
-
-def test_mor_concurrent_wideners_serialized(spark, tmp_path):
-    """Round-10 self-review hole, now closed: on the rename backend,
-    two concurrent WIDENING appends could clobber each other's meta
-    column additions before the epoch-commit enforcement fired —
-    writer B's meta rewrite silently dropping writer A's just-
-    committed column.  Wideners now serialize on an exclusive
-    .widen_lock: the loser refuses loudly, the winner's columns
-    survive, and a crashed widener's stale lock is vacuum-swept."""
-    import cosmap_spark.sinks.mor as M
-    from cosmap_spark.sinks.mor import mor_vacuum
-
-    path = str(tmp_path / "store")
-    base = spark.range(0, 10).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    )
-    mor_init(base, path, ["k"])
-
-    wide_a = spark.createDataFrame([(1, 11, 0.5)],
-                                   "k long, v long, score double")
-    # simulate writer A holding the lock mid-widen
-    os.makedirs(os.path.join(path, ".widen_lock"))
-    with pytest.raises(ValueError, match="widen_lock"):
-        mor_append(spark, path, wide_a, allow_new_columns=True)
-    # meta untouched by the refused widener
-    assert "score" not in {
-        f["name"] for f in M._load_meta(path)["schema"]["fields"]
-    }
-    # a crashed widener's stale lock is vacuum-swept (age-guarded)
-    old = __import__("time").time() - 7200
-    os.utime(os.path.join(path, ".widen_lock"), (old, old))
-    assert any(
-        p.endswith(".widen_lock")
-        for p in mor_vacuum(path, min_age_seconds=3600)
-    )
-    # and the retried widen commits; a SECOND widener adding a
-    # DIFFERENT column under the lock discipline merges, never clobbers
-    assert mor_append(spark, path, wide_a, allow_new_columns=True) == 1
-    wide_b = spark.createDataFrame([(2, 22, "en")],
-                                   "k long, v long, lang string")
-    assert mor_append(spark, path, wide_b, allow_new_columns=True) == 2
-    cols = set(mor_read(spark, path).columns)
-    assert {"score", "lang"} <= cols
-    m = {r["k"]: (r["score"], r["lang"])
-         for r in mor_read(spark, path).collect()}
-    assert m[1] == (0.5, None) and m[2] == (None, "en")
-    # lock released after each widen
-    assert not os.path.exists(os.path.join(path, ".widen_lock"))
 
 
 class DictFS:
@@ -1028,7 +804,7 @@ def test_mor_manifest_custom_commitfs(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 5).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest", fs=fs)
+    mor_init(base, path, ["k"], fs=fs)
     # no manifest file on the local filesystem — the dict holds them
     assert not os.path.exists(os.path.join(path, "_manifests"))
     assert len(fs.objects) == 1
@@ -1077,7 +853,7 @@ def test_mor_manifest_compact_race_keeps_concurrent_append(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     mor_append(spark, path, _batch(spark, [(1, 111, "u1", False)]))
 
     raced = spark.createDataFrame(
@@ -1121,9 +897,8 @@ def test_mor_model_differential_random_ops(spark, store, seed):
     upsert/delete/widen/compact/vacuum/expire operations against a
     plain python dict model — after EVERY operation the store view
     equals the model exactly (keys, values, widened columns, NULLs).
-    Runs on both backends via the parametrized fixture; the manifest
-    param also exercises history expiry mid-sequence, PLUS (round-10
-    continuation) a downstream replica kept current by mor_sync under
+    The sequence also exercises history expiry mid-sequence, PLUS
+    (round-10 continuation) a downstream replica kept current by mor_sync under
     the same random schedule — including the documented re-bootstrap
     recovery when expiry cuts the cursor's history — and the
     change-feed apply law over the retained version range at the
@@ -1221,41 +996,38 @@ def test_mor_model_differential_random_ops(spark, store, seed):
         elif op == "vacuum":
             from cosmap_spark.sinks.mor import mor_vacuum
 
-            if _kind(store) == "manifest" and rng.random() < 0.5:
+            if rng.random() < 0.5:
                 from cosmap_spark.sinks.commit import ManifestStore
 
                 ManifestStore(store).expire_versions(keep_last=1)
             mor_vacuum(store, min_age_seconds=0)
         check()
-        if _kind(store) == "manifest" and (
-            rng.random() < 0.4 or step == 11
-        ):
+        if rng.random() < 0.4 or step == 11:
             sync_and_check()
 
     # change-feed apply law over the retained version range (expiry
     # keeps a contiguous suffix, so the walk never gaps): applying
     # the feed to the oldest retained view reproduces the head
-    if _kind(store) == "manifest":
-        from cosmap_spark.sinks.commit import ManifestStore
-        from cosmap_spark.sinks.mor import CHANGE_TYPE_COL, mor_changes
+    from cosmap_spark.sinks.commit import ManifestStore
+    from cosmap_spark.sinks.mor import CHANGE_TYPE_COL, mor_changes
 
-        vs = ManifestStore(store).versions()
-        lo, hi = vs[0], vs[-1]
-        if hi > lo:
-            feed = mor_changes(spark, store, from_version=lo,
-                               to_version=hi)
-            v_lo = mor_read(spark, store, version=lo)
-            for c, t in feed.dtypes:  # lo may predate a widening
-                if c != CHANGE_TYPE_COL and c not in v_lo.columns:
-                    v_lo = v_lo.withColumn(c, F.lit(None).cast(t))
-            applied = _apply_changes(v_lo, feed, ["k"])
-            assert _rows(applied) == _rows(
-                mor_read(spark, store, version=hi)
-            ), f"seed {seed}: change-feed apply law diverged"
+    vs = ManifestStore(store).versions()
+    lo, hi = vs[0], vs[-1]
+    if hi > lo:
+        feed = mor_changes(spark, store, from_version=lo,
+                           to_version=hi)
+        v_lo = mor_read(spark, store, version=lo)
+        for c, t in feed.dtypes:  # lo may predate a widening
+            if c != CHANGE_TYPE_COL and c not in v_lo.columns:
+                v_lo = v_lo.withColumn(c, F.lit(None).cast(t))
+        applied = _apply_changes(v_lo, feed, ["k"])
+        assert _rows(applied) == _rows(
+            mor_read(spark, store, version=hi)
+        ), f"seed {seed}: change-feed apply law diverged"
 
 
 def test_mor_manifest_epoch_watermark_never_recycles(spark, tmp_path):
-    """Epoch numbers on the manifest backend ride a monotone watermark:
+    """Epoch numbers ride a monotone watermark:
     a compaction empties the live epoch list but the NEXT append claims
     max_epoch + 1, never 1 again — epoch order == commit order globally
     (what mor_changes' feed ordering and mor_compact's retry reasoning
@@ -1267,7 +1039,7 @@ def test_mor_manifest_epoch_watermark_never_recycles(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     assert mor_append(spark, path, _batch(spark, [(1, 11, "a", False)])) == 1
     assert mor_append(spark, path, _batch(spark, [(2, 22, "b", False)])) == 2
     assert mor_compact(spark, path) == 2
@@ -1290,7 +1062,7 @@ def test_mor_manifest_append_cas_retry_self_heals(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
 
     rival = _batch(spark, [(7, 777, "rival", False)])
     real = C.LocalFS.publish_exclusive
@@ -1338,7 +1110,7 @@ def test_mor_manifest_compact_race_with_interleaved_compact(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     mor_append(spark, path, _batch(spark, [(1, 11, "a", False)]))
     mor_append(spark, path, _batch(spark, [(2, 22, "b", False)]))
     # simulate a PRE-WATERMARK store: the rival append below must claim
@@ -1412,7 +1184,7 @@ def test_mor_changes_basic_and_apply_law(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")          # v1
+    mor_init(base, path, ["k"])          # v1
     mor_append(spark, path, _batch(
         spark, [(1, 111, "upd", False), (100, 1000, "new", False)]))  # v2
     mor_delete_keys(spark, path,
@@ -1443,7 +1215,7 @@ def test_mor_changes_net_semantics(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")            # v1
+    mor_init(base, path, ["k"])            # v1
     mor_append(spark, path, _batch(spark, [(50, 1, "a", False)]))   # v2
     mor_append(spark, path, _batch(spark, [(50, 2, "b", False),
                                            (1, 100, "u1", False)]))  # v3
@@ -1468,8 +1240,8 @@ def test_mor_changes_net_semantics(spark, tmp_path):
 def test_mor_changes_across_compaction_and_empty_ranges(spark, tmp_path):
     """Epochs folded away by an interleaved compaction are still fed
     (collected by dir on first appearance through the version walk); a
-    pure-compaction range yields an EMPTY feed; expired history and
-    the rename backend refuse loudly."""
+    pure-compaction range yields an EMPTY feed; expired history
+    refuses loudly."""
     from cosmap_spark.sinks.commit import ManifestStore
     from cosmap_spark.sinks.mor import mor_changes
 
@@ -1478,7 +1250,7 @@ def test_mor_changes_across_compaction_and_empty_ranges(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")             # v1
+    mor_init(base, path, ["k"])             # v1
     mor_append(spark, path, _batch(spark, [(1, 111, "u", False)]))  # v2
     assert mor_compact(spark, path) == 1                        # v3
     mor_append(spark, path, _batch(spark, [(2, 222, "w", False)]))  # v4
@@ -1493,12 +1265,6 @@ def test_mor_changes_across_compaction_and_empty_ranges(spark, tmp_path):
     # pure-compaction range: the view did not change
     assert mor_changes(spark, path, from_version=2,
                        to_version=3).count() == 0
-
-    # rename backend refuses (no history)
-    rpath = str(tmp_path / "rstore")
-    mor_init(base, rpath, ["k"])
-    with pytest.raises(ValueError, match="manifest backend"):
-        mor_changes(spark, rpath, from_version=1)
 
     # expired history refuses loudly
     ManifestStore(path).expire_versions(keep_last=1)
@@ -1517,7 +1283,7 @@ def test_mor_changes_schema_widening(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")             # v1
+    mor_init(base, path, ["k"])             # v1
     wide = spark.createDataFrame([(1, 111, "u", 0.5)],
                                  "k long, v long, name string, score double")
     mor_append(spark, path, wide, allow_new_columns=True)       # v2
@@ -1535,8 +1301,7 @@ def test_mor_changes_schema_widening(spark, tmp_path):
     assert _rows(applied) == _rows(mor_read(spark, path, version=2))
 
 
-@pytest.mark.parametrize("dst_backend", ["rename", "manifest"])
-def test_mor_sync_bootstrap_and_incremental(spark, tmp_path, dst_backend):
+def test_mor_sync_bootstrap_and_incremental(spark, tmp_path):
     """mor_sync: bootstrap copies the pinned source view, each later
     call applies exactly the net changes (one destination epoch), a
     pure-compaction source range advances the cursor with no epoch,
@@ -1549,9 +1314,9 @@ def test_mor_sync_bootstrap_and_incremental(spark, tmp_path, dst_backend):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
 
-    r = mor_sync(spark, src, dst, dst_backend=dst_backend)
+    r = mor_sync(spark, src, dst)
     assert r["applied"] and r["to_version"] == 1
     assert _rows(mor_read(spark, dst)) == _rows(mor_read(spark, src))
 
@@ -1606,7 +1371,7 @@ def test_mor_sync_replay_windows(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
     mor_sync(spark, src, dst)
     mor_append(spark, src, _batch(spark, [(1, 111, "u", False)]))
 
@@ -1647,21 +1412,15 @@ def test_mor_sync_replay_windows(spark, tmp_path):
 
 
 def test_mor_sync_guards(spark, tmp_path):
-    """Rename-backend sources and key-mismatched destinations refuse
-    loudly."""
+    """Key-mismatched destinations refuse loudly."""
     from cosmap_spark.sinks.mor import mor_sync
 
     base = spark.range(0, 5).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    rsrc = str(tmp_path / "rsrc")
-    mor_init(base, rsrc, ["k"])
-    with pytest.raises(ValueError, match="manifest-backend"):
-        mor_sync(spark, rsrc, str(tmp_path / "d"))
-
     msrc = str(tmp_path / "msrc")
-    mor_init(base, msrc, ["k"], backend="manifest")
+    mor_init(base, msrc, ["k"])
     other = str(tmp_path / "other")
     mor_init(base.withColumnRenamed("k", "kk"), other, ["kk"])
     # give the mismatched store a cursor so the provenance guard
@@ -1678,7 +1437,7 @@ def test_mor_sync_guards(spark, tmp_path):
 def test_mor_maintain_policy(spark, store):
     """mor_maintain applies the health page's advice in one call:
     below the threshold nothing compacts; at it the stack folds,
-    history expires (manifest, opt-in), and debris vacuums — each step
+    history expires (opt-in), and debris vacuums — each step
     riding its own crash-safe contract."""
     from cosmap_spark.sinks.mor import mor_maintain
 
@@ -1689,21 +1448,18 @@ def test_mor_maintain_policy(spark, store):
                      vacuum_age_seconds=0)
     assert r["compacted_epochs"] == 0 and _n_epochs(store) == 3
 
-    kwargs = {"compact_after": 3, "vacuum_age_seconds": 0}
-    if _kind(store) == "manifest":
-        kwargs["expire_keep_last"] = 1
-    r = mor_maintain(spark, store, **kwargs)
+    r = mor_maintain(spark, store, compact_after=3, vacuum_age_seconds=0,
+                     expire_keep_last=1)
     assert r["compacted_epochs"] == 3 and _n_epochs(store) == 0
     m = {row["k"]: row["v"] for row in mor_read(spark, store).collect()}
     assert m[0] == 1000 and m[1] == 1001 and m[2] == 1002
-    if _kind(store) == "manifest":
-        from cosmap_spark.sinks.commit import ManifestStore
+    from cosmap_spark.sinks.commit import ManifestStore
 
-        assert r["expired_versions"]  # history trimmed to the fold
-        assert len(ManifestStore(store).versions()) == 1
-        # expiry before vacuum: released dirs reclaimed in WITHIN the
-        # same call — only the live base remains under data/
-        assert len(os.listdir(os.path.join(store, "data"))) == 1
+    assert r["expired_versions"]  # history trimmed to the fold
+    assert len(ManifestStore(store).versions()) == 1
+    # expiry before vacuum: released dirs reclaimed in WITHIN the
+    # same call — only the live base remains under data/
+    assert len(os.listdir(os.path.join(store, "data"))) == 1
 
 
 def test_manifest_vacuum_sweeps_publish_staging_debris(spark, tmp_path):
@@ -1721,7 +1477,7 @@ def test_manifest_vacuum_sweeps_publish_staging_debris(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, path, ["k"], backend="manifest")
+    mor_init(base, path, ["k"])
     ms = ManifestStore(path)
     mdir = os.path.join(path, "_manifests")
     stale = os.path.join(mdir, ".v000000002.json.deadbeef")
@@ -1753,7 +1509,7 @@ def test_mor_sync_provenance_and_expiry_guards(spark, tmp_path):
         F.lit("x").alias("name"),
     )
     src = str(tmp_path / "src")
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
 
     # destination exists, cursor does not -> refuse to adopt
     orphan = str(tmp_path / "orphan")
@@ -1785,9 +1541,8 @@ def test_mor_sync_over_custom_commitfs(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, src, ["k"], backend="manifest", fs=fs)
-    r = mor_sync(spark, src, dst, dst_backend="manifest",
-                 src_fs=fs, dst_fs=fs)
+    mor_init(base, src, ["k"], fs=fs)
+    r = mor_sync(spark, src, dst, src_fs=fs, dst_fs=fs)
     assert r["applied"]
     mor_append(spark, src, _batch(spark, [(1, 111, "u", False)]), fs=fs)
     mor_delete_keys(spark, src,
@@ -1816,7 +1571,7 @@ def test_mor_verbs_refuse_non_mor_manifest_store(spark, tmp_path):
         [(1, "alpha beta"), (2, "gamma")], "doc_id long, text string"
     )
     p = str(tmp_path / "lexstore")
-    save_lex_index(p, *build_lex_index(docs), backend="manifest")
+    save_lex_index(p, *build_lex_index(docs))
     for fn in (
         lambda: mor_read(spark, p),
         lambda: mor_append(spark, p, docs),
@@ -1863,7 +1618,7 @@ def test_mor_sync_agg_law_and_incremental(spark, tmp_path):
         (F.col("id") * 10).alias("v"),
     ).unionByName(spark.createDataFrame(
         [(50, "z", None)], "k long, g string, v long"))
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
 
     r = mor_sync_agg(spark, src, dst, group_by=["g"], aggs=_agg_spec())
     assert r["applied"]
@@ -1928,7 +1683,7 @@ def test_mor_sync_agg_replay_windows(spark, tmp_path):
         F.chr(F.lit(97) + (F.col("id") % 3)).alias("g"),
         (F.col("id") * 10).alias("v"),
     )
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
     mor_sync_agg(spark, src, dst, group_by=["g"], aggs=_agg_spec())
     mor_append(spark, src, _gbatch(spark, [
         (1, "b", 111, False), (0, None, None, True)]))
@@ -1975,22 +1730,16 @@ def test_mor_sync_agg_replay_windows(spark, tmp_path):
 
 
 def test_mor_sync_agg_guards(spark, tmp_path):
-    """Rename-backend source, spec drift, adopting a cursor-less
-    destination, and NULL grouping values in the feed all refuse."""
+    """Spec drift, adopting a cursor-less destination, and NULL
+    grouping values in the feed all refuse."""
     from cosmap_spark.sinks.mor import mor_sync_agg
 
     base = spark.range(0, 6).select(
         F.col("id").alias("k"), F.lit("a").alias("g"),
         (F.col("id") * 10).alias("v"),
     )
-    rsrc = str(tmp_path / "rsrc")
-    mor_init(base, rsrc, ["k"])
-    with pytest.raises(ValueError, match="manifest-backend"):
-        mor_sync_agg(spark, rsrc, str(tmp_path / "d"),
-                     group_by=["g"], aggs=_agg_spec())
-
     src = str(tmp_path / "src")
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
     dst = str(tmp_path / "agg")
     mor_sync_agg(spark, src, dst, group_by=["g"], aggs=_agg_spec())
     with pytest.raises(ValueError, match="spec mismatch"):
@@ -1998,8 +1747,7 @@ def test_mor_sync_agg_guards(spark, tmp_path):
                      aggs={"c": ("count", None)})
 
     orphan = str(tmp_path / "orphan")
-    mor_init(base.select("g", "v").groupBy("g").count(), orphan, ["g"],
-             backend="manifest")
+    mor_init(base.select("g", "v").groupBy("g").count(), orphan, ["g"])
     with pytest.raises(ValueError, match="provenance"):
         mor_sync_agg(spark, src, orphan, group_by=["g"],
                      aggs=_agg_spec())
@@ -2023,7 +1771,7 @@ def test_mor_restore_round_trip_and_feed(spark, tmp_path):
         (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, src, ["k"], backend="manifest")          # v1
+    mor_init(base, src, ["k"])          # v1
     rep = str(tmp_path / "rep")
     mor_sync(spark, src, rep)
     mor_append(spark, src, _batch(
@@ -2059,7 +1807,7 @@ def test_mor_restore_round_trip_and_feed(spark, tmp_path):
 
 def test_mor_restore_widened_store_and_guards(spark, tmp_path):
     """Restoring past a schema widening keeps the widened schema with
-    NULLs in the new column; the rename backend refuses."""
+    NULLs in the new column."""
     from cosmap_spark.sinks.mor import mor_restore
 
     src = str(tmp_path / "src")
@@ -2067,7 +1815,7 @@ def test_mor_restore_widened_store_and_guards(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit("x").alias("name"),
     )
-    mor_init(base, src, ["k"], backend="manifest")          # v1
+    mor_init(base, src, ["k"])          # v1
     wide = spark.createDataFrame(
         [(3, 333, "w", 7)], "k long, v long, name string, score long"
     )
@@ -2080,8 +1828,3 @@ def test_mor_restore_widened_store_and_guards(spark, tmp_path):
     assert view.where(F.col("score").isNotNull()).count() == 0
     assert _rows(view.drop("score")) == \
         _rows(mor_read(spark, src, version=1))
-
-    rstore = str(tmp_path / "r")
-    mor_init(base, rstore, ["k"])
-    with pytest.raises(ValueError, match="manifest backend"):
-        mor_restore(spark, rstore, version=1)

@@ -2470,9 +2470,9 @@ def test_fingerprint_marker_write_is_atomic(tmp_path):
 def test_store_health_page(spark, tmp_path):
     """store_health (round-10): one maintenance table in
     monitor_report's schema — epoch depth (significant at the
-    compact_after threshold), debris / orphan counts (significant when
-    > 0), the interrupted-swap flag, ledger last-epoch, and per-state
-    row counts for monitor stores; MOR bases are never scanned."""
+    compact_after threshold), orphan counts (significant when > 0),
+    the interrupted-swap flag, ledger last-epoch, and per-state row
+    counts for monitor stores; MOR bases are never scanned."""
     import os
 
     from pyspark.sql import functions as F
@@ -2489,15 +2489,8 @@ def test_store_health_page(spark, tmp_path):
         [(1, 99, False)], f"k long, v long, {DELETE_COL} boolean"
     )
 
-    rstore = str(tmp_path / "r")
-    mor_init(base, rstore, ["k"])
-    mor_append(spark, rstore, batch)
-    dead = os.path.join(rstore, "deltas", ".tmp_dead")
-    os.makedirs(dead)
-    os.utime(dead, (1, 1))  # age past the vacuum guard
-
     mstore = str(tmp_path / "m")
-    mor_init(base, mstore, ["k"], backend="manifest")
+    mor_init(base, mstore, ["k"])
     mor_append(spark, mstore, batch)
     # orphan data dir (died-before-publish)
     orphan = os.path.join(mstore, "data", "orphan123")
@@ -2516,17 +2509,13 @@ def test_store_health_page(spark, tmp_path):
               os.path.join(mon, "state.__merge_backup"))
 
     h = store_health(
-        spark, {"r": rstore, "m": mstore, "mon": mon}, compact_after=1
+        spark, {"m": mstore, "mon": mon}, compact_after=1
     )
     rows = {(r["subject"], r["statistic"]): (r["value"], r["significant"])
             for r in h.collect()}
 
-    assert rows[("r", "mor_epochs")] == (1.0, True)  # >= compact_after
-    assert rows[("r", "debris_dirs")] == (1.0, True)
-    assert rows[("r", "pending_interrupted_swap")] == (0.0, False)
-    assert ("r", "mor_oldest_delta_age_s") in rows
-
-    assert rows[("m", "mor_epochs")] == (1.0, True)
+    assert rows[("m", "mor_epochs")] == (1.0, True)  # >= compact_after
+    assert ("m", "mor_oldest_delta_age_s") in rows
     assert rows[("m", "manifest_versions")] == (2.0, False)
     assert rows[("m", "orphan_data_dirs")] == (1.0, True)
 
@@ -2535,7 +2524,7 @@ def test_store_health_page(spark, tmp_path):
         == (1.0, True)
 
     # monitor_report unions the health rows in the same schema
-    rep = monitor_report(spark, health_stores={"r": rstore})
+    rep = monitor_report(spark, health_stores={"m": mstore})
     assert rep.columns == ["monitor", "subject", "statistic", "value",
                            "p_value", "significant"]
     assert rep.where(F.col("monitor") == "health").count() >= 3
@@ -2565,7 +2554,7 @@ def test_store_health_sync_staleness(spark, tmp_path):
         F.col("id").alias("k"), F.lit("a").alias("g"),
         (F.col("id") * 2).alias("v"),
     )
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
     rep = str(tmp_path / "rep")
     agg = str(tmp_path / "agg")
     mor_sync(spark, src, rep)
@@ -2605,8 +2594,8 @@ def test_mor_sync_cross_source_refused(spark, tmp_path):
     )
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
-    mor_init(base, a, ["k"], backend="manifest")
-    mor_init(base, b, ["k"], backend="manifest")
+    mor_init(base, a, ["k"])
+    mor_init(base, b, ["k"])
 
     rep = str(tmp_path / "rep")
     mor_sync(spark, a, rep)
