@@ -60,7 +60,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cosmap_spark.sinks.commit import CommitConflict, ManifestStore
+from cosmap_spark.sinks.commit import (
+    DATA_DIR, MANIFEST_DIR, CommitConflict, ManifestStore,
+)
 
 DELETE_COL = "__deleted"
 
@@ -148,17 +150,25 @@ def mor_init(df: DataFrame, path: str, keys: list[str], *,
     base snapshot: the base lands in an immutable ``data/<uuid>`` dir
     and manifest v1 is CAS-published.
 
-    Refusal is on a PUBLISHED manifest, not on the path existing — on
-    an object store a prefix holding only orphan data from a died init
-    is not a store (re-run the init; vacuum then reclaims the orphan),
-    and two racing initializers are serialized by the CAS (exactly one
-    v1 wins)."""
+    Stores are never silently re-initialized: a path with a published
+    manifest refuses, and so does one holding anything besides the
+    store's own ``data/`` and ``_manifests/`` entries (a parquet table,
+    a rename-layout index).  A path holding only orphan data from a
+    died init is not a store — re-run the init; vacuum then reclaims
+    the orphan.  Two racing initializers are serialized by the CAS
+    (exactly one v1 wins)."""
     _check_base_columns(df, list(keys), "mor_init")
     ms = _manifest_store(path, fs, "mor_init")
     if ms.exists():
         raise ValueError(
             f"mor_init: {path!r} already exists (it has a published "
             "manifest)"
+        )
+    foreign = sorted(set(ms.fs.listdir(ms.path)) - {DATA_DIR, MANIFEST_DIR})
+    if foreign:
+        raise ValueError(
+            f"mor_init: {path!r} already exists and is not a "
+            f"merge-on-read store (it holds {foreign[:5]})"
         )
     _refuse_null_keys(df, list(keys), "mor_init")
     rel, target = ms.new_data_dir()

@@ -340,10 +340,10 @@ def _swap_dir_in(path: str, tmp: str) -> None:
     the shared crash-critical back half of :func:`_swap_in` and of
     every store that stages its own temp contents (the plaid token
     bags): clear a stale backup, rename live→backup, tmp→live
-    (restoring live if that rename fails), drop the backup.  One implementation so a future
-    hardening (fsync, different restore policy) cannot silently miss
-    a hand-rolled copy (the round-9 review finding).  Uses the
-    standard ``.__merge_backup`` suffix, so
+    (restoring live if that rename fails), drop the backup.  One
+    implementation so a future hardening (fsync, different restore
+    policy) cannot silently miss a hand-rolled copy (the round-9 review
+    finding).  Uses the standard ``.__merge_backup`` suffix, so
     :func:`_refuse_interrupted_swap` covers every caller."""
     import os
     import shutil

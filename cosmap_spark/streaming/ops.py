@@ -1923,6 +1923,10 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
       table (monitor state is O(cols·bins)-sized, so counting is
       cheap; MOR bases are table-sized and deliberately NEVER counted
       here — health must not cost a scan);
+    - a merge-on-read store in the retired rename layout (a
+      ``_mor_meta.json`` sidecar) reports only
+      ``unsupported_legacy_mor_layout`` (significant — every mor_*
+      verb refuses it);
     - sync destinations (a ``<path>.sync`` / ``<path>.aggsync`` cursor
       beside the store) report ``sync_src_version`` /
       ``aggsync_src_version`` and, via the cursor's ``src_path``
@@ -1975,6 +1979,11 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
 
     for name, path in stores.items():
         sync_facts(name, path)
+        if _os.path.exists(_os.path.join(path, "_mor_meta.json")):
+            # the retired rename MOR layout: every mor_* verb refuses
+            # it, and its base must not be counted as a monitor table
+            fact(name, "unsupported_legacy_mor_layout", 1, True)
+            continue
         if _os.path.isdir(_os.path.join(path, "_manifests")):
             ms = ManifestStore(path)
             _, man = ms.latest()
@@ -2366,9 +2375,9 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     (``sinks.mor.mor_append`` — O(batch), no base file opened, one
     manifest publish) instead of rewriting the table; reads reconcile
     via ``mor_read`` and ``mor_compact`` folds the log on whatever
-    cadence taste dictates.  The change envelope is the store schema plus the
-    optional ``__deleted`` tombstone flag and an optional ``seq_col``
-    (collapses within-batch duplicate keys to the latest —
+    cadence taste dictates.  The change envelope is the store schema
+    plus the optional ``__deleted`` tombstone flag and an optional
+    ``seq_col`` (collapses within-batch duplicate keys to the latest —
     ``latest_per_key``; without it batches must be key-unique, which
     ``mor_append`` validates).
 

@@ -208,6 +208,12 @@ def test_mor_guards(spark, store, tmp_path):
     # not-a-store refused loudly
     with pytest.raises(ValueError, match="not a merge-on-read store"):
         mor_read(spark, str(tmp_path / "nope"))
+    # no store is initialized over other data (here a parquet table)
+    tbl = str(tmp_path / "tbl")
+    spark.range(3).write.parquet(tbl)
+    with pytest.raises(ValueError, match="not a merge-on-read store"):
+        mor_init(spark.range(1).select(F.col("id").alias("k")), tbl, ["k"])
+    assert not os.path.isdir(os.path.join(tbl, "_manifests"))
     # remote URIs without a CommitFS refuse with the seam named (the
     # backend-dispatch replacement for the blanket _require_local)
     with pytest.raises(ValueError, match="CommitFS"):
@@ -1571,7 +1577,7 @@ def test_mor_verbs_refuse_non_mor_manifest_store(spark, tmp_path):
         [(1, "alpha beta"), (2, "gamma")], "doc_id long, text string"
     )
     p = str(tmp_path / "lexstore")
-    save_lex_index(p, *build_lex_index(docs))
+    save_lex_index(p, *build_lex_index(docs), backend="manifest")
     for fn in (
         lambda: mor_read(spark, p),
         lambda: mor_append(spark, p, docs),
@@ -1579,7 +1585,9 @@ def test_mor_verbs_refuse_non_mor_manifest_store(spark, tmp_path):
         lambda: mor_delete_keys(
             spark, p, spark.createDataFrame([(1,)], "doc_id long")),
     ):
-        with pytest.raises(ValueError, match="not a.*merge-on-read"):
+        with pytest.raises(
+            ValueError, match="manifest store but not a merge-on-read"
+        ):
             fn()
 
 

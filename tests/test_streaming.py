@@ -2472,7 +2472,8 @@ def test_store_health_page(spark, tmp_path):
     monitor_report's schema — epoch depth (significant at the
     compact_after threshold), orphan counts (significant when > 0),
     the interrupted-swap flag, ledger last-epoch, and per-state row
-    counts for monitor stores; MOR bases are never scanned."""
+    counts for monitor stores; MOR bases are never scanned, and a
+    legacy rename-layout MOR store is flagged, not counted."""
     import os
 
     from pyspark.sql import functions as F
@@ -2508,8 +2509,15 @@ def test_store_health_page(spark, tmp_path):
     os.rename(os.path.join(mon, "state"),
               os.path.join(mon, "state.__merge_backup"))
 
+    # a store in the retired rename MOR layout: flagged, base unscanned
+    legacy = str(tmp_path / "legacy")
+    base.write.parquet(os.path.join(legacy, "base"))
+    with open(os.path.join(legacy, "_mor_meta.json"), "w") as f:
+        f.write("{}")
+
     h = store_health(
-        spark, {"m": mstore, "mon": mon}, compact_after=1
+        spark, {"m": mstore, "mon": mon, "legacy": legacy},
+        compact_after=1,
     )
     rows = {(r["subject"], r["statistic"]): (r["value"], r["significant"])
             for r in h.collect()}
@@ -2518,6 +2526,10 @@ def test_store_health_page(spark, tmp_path):
     assert ("m", "mor_oldest_delta_age_s") in rows
     assert rows[("m", "manifest_versions")] == (2.0, False)
     assert rows[("m", "orphan_data_dirs")] == (1.0, True)
+
+    assert [k for k in rows if k[0] == "legacy"] == \
+        [("legacy", "unsupported_legacy_mor_layout")]
+    assert rows[("legacy", "unsupported_legacy_mor_layout")] == (1.0, True)
 
     assert rows[("mon", "ledger_last_epoch")] == (2.0, False)
     assert rows[("mon", "pending_interrupted_swap:state.__merge_backup")] \
